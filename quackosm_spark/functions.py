@@ -1,9 +1,11 @@
 """Top-level conversion API — Spark analogue of quackosm/functions.py.
 
-`convert_pbf_to_dataframe` builds the full lazy plan (scan → C1..C11) and
-returns the shaped features DataFrame; `convert_pbf_to_parquet` additionally
-writes GeoParquet with content-addressed caching (§1.5) and optional Hilbert
-spatial sorting (O3).
+`convert_pbf_to_dataframe` builds the plan (scan → C1..C11) and returns the
+shaped features DataFrame, with the scan and the features persisted once each;
+`convert_pbf_to_parquet` additionally writes GeoParquet with content-addressed
+caching (§1.5) and optional Hilbert spatial sorting (O3). The parquet and
+(Geo)DataFrame entry points release every cache they made when they return
+(``plans.pipeline.conversion_scope``).
 """
 
 from __future__ import annotations
@@ -11,15 +13,15 @@ from __future__ import annotations
 from pathlib import Path
 from typing import Any, Optional, Sequence, Union
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from quackosm_spark import cache
 from quackosm_spark.filters.tags import merge_osm_tags_filter
 from quackosm_spark.plans.pipeline import (
     PbfPipelineOptions,
     build_features,
+    conversion_scope,
+    persist,
 )
 from quackosm_spark.plans.output import (
     dedup_features,
@@ -29,7 +31,7 @@ from quackosm_spark.plans.output import (
     keep_relevant_tags,
     spatial_sort,
 )
-from quackosm_spark.sinks.geoparquet import write_geoparquet
+from quackosm_spark.sinks.geoparquet import collect_geo_stats, write_geoparquet
 from quackosm_spark.sources.pbf import read_osm_pbf
 
 Geometry = dict[str, Any]
@@ -116,6 +118,8 @@ def convert_pbf_to_dataframe(
         # ELEMENTS once up front instead — one shuffle, and only when there
         # is more than one input file.
         elements = elements.dropDuplicates(["kind", "id"])
+    # the scan feeds the wildcard-key pass and every pipeline branch
+    elements = persist(elements)
     from quackosm_spark.filters.tags import (  # noqa: PLC0415
         _is_grouped_filter,
         expand_wildcard_keys,
@@ -141,6 +145,9 @@ def convert_pbf_to_dataframe(
     features = build_features(spark, elements, opts)
     if len(paths) > 1:
         features = dedup_features(features)
+    # every driver-side action downstream (column discovery, empty-column
+    # drop, geo stats, sort sample, write) reads the features from here
+    features = persist(features)
 
     explode = opts.resolve_explode_tags()
     # Shaping rule (reference pbf_file_reader.py:3699-3711): a filter with no
@@ -166,6 +173,7 @@ def convert_pbf_to_dataframe(
     return features
 
 
+@conversion_scope()
 def convert_pbf_to_parquet(
     spark: SparkSession,
     pbf_path: Union[str, Path, Sequence[Union[str, Path]]],
@@ -235,52 +243,22 @@ def convert_pbf_to_parquet(
         ignore_metadata_tags=ignore_metadata_tags,
         osm_way_polygon_features_config=osm_way_polygon_features_config,
     )
+    geometry_types, geo_bbox = collect_geo_stats(features)
     if sort_result:
-        features = spatial_sort(features, algorithm=sort_algorithm)
-    writer_kwargs = dict(
+        features = spatial_sort(features, extent=geo_bbox, algorithm=sort_algorithm)
+    write_geoparquet(
+        features,
+        result_file_path,
+        geometry_types=geometry_types,
+        bbox=geo_bbox,
         compression=compression,
         compression_level=compression_level,
         row_group_size=row_group_size,
         parquet_version=parquet_version,
         max_records_per_file=max_records_per_file,
         bbox_column=bbox_column,
+        encoding="WKT" if save_as_wkt else "WKB",
     )
-    if save_as_wkt:
-        # geo stats (types + bbox) must come from the WKB column; compute
-        # them BEFORE re-encoding, then stamp the footer with encoding=WKT —
-        # the reference's WKT outputs carry the same geo metadata
-        # (tests/base/test_pbf_file_reader.py:95-98)
-        from pyspark.sql.types import StringType
-
-        from quackosm_spark.sinks.geoparquet import collect_geo_stats
-
-        geometry_types, geo_bbox = collect_geo_stats(features)
-        if bbox_column and "bbox" not in features.columns:
-            # the covering column also decodes WKB — attach it pre-re-encode
-            from quackosm_spark.plans.output import geometry_bbox_udf
-
-            features = features.withColumn("bbox", geometry_bbox_udf("geometry"))
-
-        @F.pandas_udf(StringType())
-        def _to_wkt(geometry: pd.Series) -> pd.Series:
-            from quackosm_spark.geometry import model, wkb
-
-            return pd.Series(
-                [model.to_wkt(wkb.loads(bytes(b))) if b is not None else None
-                 for b in geometry]
-            )
-
-        features = features.withColumn("geometry", _to_wkt("geometry"))
-        write_geoparquet(
-            features,
-            result_file_path,
-            geometry_types=geometry_types,
-            bbox=geo_bbox,
-            encoding="WKT",
-            **writer_kwargs,
-        )
-        return result_file_path
-    write_geoparquet(features, result_file_path, **writer_kwargs)
     return result_file_path
 
 
@@ -545,6 +523,7 @@ def convert_pbf_to_duckdb(
     return _parquet_to_duckdb(parquet_path, duckdb_table_name, result_file_path)
 
 
+@conversion_scope()
 def convert_pbf_to_geodataframe(
     spark: SparkSession,
     pbf_path: Union[str, Path, Sequence[Union[str, Path]]],

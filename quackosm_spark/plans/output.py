@@ -9,11 +9,10 @@ from __future__ import annotations
 
 from typing import Optional
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from quackosm_spark.constants import FEATURES_INDEX
 from quackosm_spark.filters.tags import (
@@ -190,12 +189,6 @@ def drop_empty_columns(features: DataFrame, protected: tuple[str, ...] = (FEATUR
     candidates = [c for c in features.columns if c not in protected]
     if not candidates:
         return features
-    # the counts pass below is an ACTION; without persisting, it would run
-    # the full upstream pipeline once here and again for the caller's own
-    # action (measured: 2× conversion time in exploded mode)
-    from pyspark import StorageLevel
-
-    features = features.persist(StorageLevel.MEMORY_AND_DISK)
     counts = features.select(
         [F.count(F.col(f"`{c}`")).alias(c) for c in candidates]
     ).collect()[0]
@@ -209,25 +202,16 @@ def dedup_features(features: DataFrame) -> DataFrame:
 
 
 @F.pandas_udf(LongType())
-def _hilbert_key_udf(geometry: pd.Series, extent_minx: pd.Series, extent_miny: pd.Series,
-                     extent_maxx: pd.Series, extent_maxy: pd.Series) -> pd.Series:
-    from quackosm_spark.geometry import model
+def _hilbert_key_udf(cx: pd.Series, cy: pd.Series, extent_minx: pd.Series,
+                     extent_miny: pd.Series, extent_maxx: pd.Series,
+                     extent_maxy: pd.Series) -> pd.Series:
     from quackosm_spark.geometry.ops import hilbert_index
 
-    n = len(geometry)
-    xs = np.empty(n)
-    ys = np.empty(n)
-    for i, blob in enumerate(geometry):
-        b = model.bounds(wkb_codec.loads(bytes(blob)))
-        xs[i] = (b[0] + b[2]) / 2.0
-        ys[i] = (b[1] + b[3]) / 2.0
-    ext = (
-        float(extent_minx.iloc[0]),
-        float(extent_miny.iloc[0]),
-        float(extent_maxx.iloc[0]),
-        float(extent_maxy.iloc[0]),
+    ext = tuple(
+        float(side.iloc[0])
+        for side in (extent_minx, extent_miny, extent_maxx, extent_maxy)
     )
-    return pd.Series(hilbert_index(xs, ys, ext))
+    return pd.Series(hilbert_index(cx.to_numpy(float), cy.to_numpy(float), ext))
 
 
 def spatial_sort(
@@ -238,11 +222,15 @@ def spatial_sort(
 ) -> DataFrame:
     """O3 spatial sort (reference dispatch pbf_file_reader.py:4021-4043).
 
-    ``algorithm="hilbert"`` (default): curve key of the geometry centroid →
-    ``repartitionByRange`` + ``sortWithinPartitions`` so readers get
-    row-group pruning by locality. ``extent`` defaults to the dataset bbox
-    (computed with one agg pass — A7). ``num_partitions`` pins the output
-    file count (AQE otherwise coalesces small outputs to one).
+    Both algorithms key on the geometry's bbox centroid (one WKB decode per
+    row, ``geometry_bbox_udf``), then ``repartitionByRange`` +
+    ``sortWithinPartitions`` so readers get row-group pruning by locality.
+    ``num_partitions`` pins the output file count (AQE otherwise coalesces
+    small outputs to one).
+
+    ``algorithm="hilbert"`` (default): curve key of the centroid scaled into
+    ``extent`` — the dataset bbox, from ``collect_geo_stats`` when not given
+    (A7; a conversion passes the bbox it computes for the footer anyway).
 
     ``algorithm="str"``: Sort-Tile-Recursive slab packing — range-partition
     on centroid x (vertical slabs), order by centroid y within each slab.
@@ -250,51 +238,31 @@ def spatial_sort(
     expressed in Spark primitives: the range partitioner computes the x
     slab boundaries from a sample, each output file is one slab.
     """
-    if algorithm == "str":
-        keyed = features.withColumn("__bb", geometry_bbox_udf("geometry")).withColumn(
-            "__cx", (F.col("__bb.xmin") + F.col("__bb.xmax")) / 2.0
-        ).withColumn("__cy", (F.col("__bb.ymin") + F.col("__bb.ymax")) / 2.0)
-        ranged = (
-            keyed.repartitionByRange(num_partitions, "__cx")
-            if num_partitions
-            else keyed.repartitionByRange("__cx")
-        )
-        return ranged.sortWithinPartitions("__cy").drop("__bb", "__cx", "__cy")
-    if algorithm != "hilbert":
+    if algorithm not in ("hilbert", "str"):
         raise ValueError(f"Unknown sort algorithm: {algorithm!r} (str|hilbert)")
-    if extent is None:
-        # ONE WKB decode per row (geometry_bbox_udf), not 4 per-coordinate
-        # UDFs each re-decoding every blob — VERDICT r01 hot-path fix
-        row = (
-            features.select(geometry_bbox_udf("geometry").alias("__bb"))
-            .agg(
-                F.min("__bb.xmin").alias("minx"),
-                F.min("__bb.ymin").alias("miny"),
-                F.max("__bb.xmax").alias("maxx"),
-                F.max("__bb.ymax").alias("maxy"),
-            )
-            .collect()[0]
+    keyed = features.withColumn("__bb", geometry_bbox_udf("geometry")).withColumn(
+        "__cx", (F.col("__bb.xmin") + F.col("__bb.xmax")) / 2.0
+    ).withColumn("__cy", (F.col("__bb.ymin") + F.col("__bb.ymax")) / 2.0)
+    range_key, sort_key = "__cx", "__cy"
+    if algorithm == "hilbert":
+        if extent is None:
+            from quackosm_spark.sinks.geoparquet import collect_geo_stats
+
+            extent = collect_geo_stats(features)[1]
+        keyed = keyed.withColumn(
+            "__hilbert",
+            _hilbert_key_udf("__cx", "__cy", *(F.lit(side) for side in extent)),
         )
-        extent = (row["minx"], row["miny"], row["maxx"], row["maxy"])
-    keyed = features.withColumn(
-        "__hilbert",
-        _hilbert_key_udf(
-            F.col("geometry"),
-            F.lit(extent[0]),
-            F.lit(extent[1]),
-            F.lit(extent[2]),
-            F.lit(extent[3]),
-        ),
-    )
+        range_key = sort_key = "__hilbert"
     ranged = (
-        keyed.repartitionByRange(num_partitions, "__hilbert")
+        keyed.repartitionByRange(num_partitions, range_key)
         if num_partitions
-        else keyed.repartitionByRange("__hilbert")
+        else keyed.repartitionByRange(range_key)
     )
-    return ranged.sortWithinPartitions("__hilbert").drop("__hilbert")
+    return ranged.sortWithinPartitions(sort_key).drop(
+        "__bb", "__cx", "__cy", "__hilbert"
+    )
 
-
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 _BBOX_STRUCT = StructType(
     [StructField(side, DoubleType()) for side in ("xmin", "ymin", "xmax", "ymax")]
@@ -303,9 +271,8 @@ _BBOX_STRUCT = StructType(
 
 @F.pandas_udf(_BBOX_STRUCT)
 def geometry_bbox_udf(geometry: pd.Series) -> pd.DataFrame:
-    """Per-feature bounds struct for the GeoParquet 1.1 bbox covering
-    column — ONE WKB decode per row (the per-coordinate UDFs above decode
-    once per coordinate; use this when all four bounds are needed)."""
+    """Per-feature bounds struct (sort key centroids, geo stats, the
+    GeoParquet 1.1 bbox covering column) — ONE WKB decode per row."""
     from quackosm_spark.geometry import model
 
     rows = [

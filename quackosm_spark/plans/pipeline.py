@@ -12,7 +12,9 @@ Differences by design (not omissions):
 - No intermediate parquet materialization: the reference spills ~30 named
   relations to disk between stages as its out-of-core strategy
   (pbf_file_reader.py:1527-2168); Spark's shuffle + AQE covers that. Where
-  the DAG forks (the prefilter outputs feed four consumers) we cache.
+  the DAG forks (the scan, the prefilter outputs feeding four consumers, the
+  finished features) we cache through ``persist``, and every conversion
+  entry point releases those caches when it returns (``conversion_scope``).
 - No memory ladders / watchdogs / group batching (reference
   ROWS_PER_GROUP_MEMORY_CONFIG): AQE + shuffle spill replace them.
 - The per-relation ring assembly (C9) runs as one ``applyInPandas`` over
@@ -27,11 +29,14 @@ broadcast the small side when a selective filter shrinks it.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass, field
-from typing import Any, Optional, Sequence
+from typing import Any, Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -67,6 +72,40 @@ from quackosm_spark.geometry.ops import (
 )
 
 Geometry = dict[str, Any]
+
+# frames persisted by the conversion currently running in this context
+_scope_frames: ContextVar[Optional[list[DataFrame]]] = ContextVar(
+    "_scope_frames", default=None
+)
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """The one persist of the conversion path. At cluster scale swap
+    MEMORY_AND_DISK for DISK_ONLY or a checkpoint dir. Inside a
+    ``conversion_scope`` the cache is released when the scope closes;
+    outside one it is caller-owned (README "Cache lifecycle")."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    frames = _scope_frames.get()
+    if frames is not None:
+        frames.append(df)
+    return df
+
+
+@contextmanager
+def conversion_scope() -> Iterator[None]:
+    """Unpersist every frame ``persist`` records while open — also usable
+    as a decorator, which opens one scope per call."""
+    frames: list[DataFrame] = []
+    token = _scope_frames.set(frames)
+    try:
+        yield
+    finally:
+        _scope_frames.reset(token)
+        # most-derived first: unpersisting a frame re-plans every cached
+        # frame still built on it (Spark's cascade=False recache)
+        for df in reversed(frames):
+            df.unpersist()
+
 
 def default_polygon_features_config() -> dict[str, Any]:
     from quackosm_spark.plans.polygon_features import OSM_WAY_POLYGON_FEATURES_CONFIG
@@ -140,19 +179,16 @@ def build_features(
     """elements (SURVEY §1.1 schema) → features (feature_id, tags, geometry WKB).
 
     Output shaping (compact/exploded/grouped) is applied by ``shape_output``;
-    this function always returns the compact map form.
+    this function always returns the compact map form. ``elements`` feeds
+    every branch, so callers persist it (``convert_pbf_to_dataframe`` does)
+    unless the scan is cheap to repeat.
     """
     opts = options or PbfPipelineOptions()
     validate_geometry_filter(opts.geometry_filter)
 
-    # The prefilter outputs feed four consumers (C6/C7/C8/C9) and the elements
-    # scan feeds every branch — persist at the fork points so the PBF is
-    # decoded once, mirroring the reference's stage materialization
-    # (pbf_file_reader.py:1527-2168) without its disk round-trips. At cluster
-    # scale swap MEMORY_AND_DISK for DISK_ONLY or a checkpoint dir.
-    from pyspark import StorageLevel
-
-    elements = elements.persist(StorageLevel.MEMORY_AND_DISK)
+    # The prefilter outputs feed four consumers (C6/C7/C8/C9) — persist at
+    # the fork points, mirroring the reference's stage materialization
+    # (pbf_file_reader.py:1527-2168) without its disk round-trips.
     nodes, ways, relations = split_elements(elements)
 
     # ---- wildcard key expansion (P4) needs one data pass --------------------
@@ -215,10 +251,9 @@ def build_features(
     ways_required_ids = relations_unnested.select(F.col("ref").alias("id")).distinct()
     ways_filtered_required_ids = ways_filtered_ids.union(ways_required_ids).distinct()
 
-    ways_unnested = (
+    ways_unnested = persist(
         ways.join(ways_filtered_required_ids, "id", "left_semi")
         .select("id", F.posexplode("refs").alias("ref_idx", "ref"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
     nodes_required_ids = ways_unnested.select(F.col("ref").alias("id")).distinct()
@@ -271,9 +306,7 @@ def build_features(
     final_node_ids = nodes_filtered_ids.union(
         ways_unnested.select(F.col("ref").alias("id")).distinct()
     ).distinct()
-    node_points = node_points_all.join(final_node_ids, "id", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    node_points = persist(node_points_all.join(final_node_ids, "id", "left_semi"))
 
     # ---- C4: referential validity (J2 applied twice) -------------------------
     ways_valid_ids = _valid_ids_by_refs(ways_unnested, node_points.select("id"))
@@ -322,9 +355,7 @@ def build_features(
     )
 
     # ---- C7: way → linestring (the big shuffle join J4) ----------------------
-    way_linestrings = _assemble_way_linestrings(ways_unnested, node_points).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    way_linestrings = persist(_assemble_way_linestrings(ways_unnested, node_points))
     filtered_way_linestrings = way_linestrings.join(
         ways_filtered_valid_ids, "id", "left_semi"
     )

@@ -23,6 +23,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from quackosm_spark.constants import GEOMETRY_COLUMN
 
@@ -101,25 +102,11 @@ def build_geo_metadata(
 
 
 def collect_geo_stats(features: DataFrame) -> tuple[list[str], tuple[float, float, float, float]]:
-    """A7 extent agg + A8 distinct geometry types, one job each on the
-    geometry column (WKB headers only for the type sniff)."""
+    """A7 extent agg + A8 distinct geometry types in ONE aggregate job over
+    the WKB geometry column; empty input → ``[]``, ``(0, 0, 0, 0)``."""
     from quackosm_spark.plans.output import geometry_bbox_udf
 
-    if features.isEmpty():
-        return [], (0.0, 0.0, 0.0, 0.0)
-
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def _geom_type(geometry: pd.Series) -> pd.Series:
-        from quackosm_spark.geometry.wkb import geometry_type
-
-        return pd.Series(
-            [geometry_type(bytes(b)) if b is not None else None for b in geometry]
-        )
-
     # one WKB decode per row: bbox struct + type sniff in a single pass
-    # (was 4 per-coordinate UDFs, each decoding every blob)
     stats = (
         features.select(
             _geom_type(GEOMETRY_COLUMN).alias("__t"),
@@ -135,7 +122,26 @@ def collect_geo_stats(features: DataFrame) -> tuple[list[str], tuple[float, floa
         .collect()[0]
     )
     types = sorted(_WKB_TYPE_NAMES.get(t, t) for t in stats["types"])
-    return types, (stats["minx"], stats["miny"], stats["maxx"], stats["maxy"])
+    sides = (stats["minx"], stats["miny"], stats["maxx"], stats["maxy"])
+    return types, tuple(0.0 if v is None else v for v in sides)
+
+
+@F.pandas_udf(StringType())
+def _geom_type(geometry: pd.Series) -> pd.Series:
+    from quackosm_spark.geometry.wkb import geometry_type
+
+    return pd.Series(
+        [geometry_type(bytes(b)) if b is not None else None for b in geometry]
+    )
+
+
+@F.pandas_udf(StringType())
+def _to_wkt(geometry: pd.Series) -> pd.Series:
+    from quackosm_spark.geometry import model, wkb
+
+    return pd.Series(
+        [model.to_wkt(wkb.loads(bytes(b))) if b is not None else None for b in geometry]
+    )
 
 
 def _stamp_footer(path: Path, geo_json: str, compression: str = "zstd") -> None:
@@ -165,7 +171,7 @@ def write_geoparquet(
     parquet_version: str | None = None,
     max_records_per_file: int | None = None,
     bbox_column: bool = False,
-    encoding: str = "WKB",
+    encoding: Literal["WKB", "WKT"] = "WKB",
 ) -> Path:
     """Distributed parquet write + geo footer stamping. Returns the directory.
 
@@ -182,7 +188,11 @@ def write_geoparquet(
     Hilbert spatial sort, parquet min/max row-group stats on the struct
     fields let any reader — Spark included, see ``read_geoparquet`` — skip
     row groups that can't intersect a query window; that's the scan-prune
-    story for spatial queries over 100 TB of output."""
+    story for spatial queries over 100 TB of output.
+
+    ``features`` carries WKB; ``encoding="WKT"`` re-encodes it after the
+    stats and covering column are taken from the WKB (reference
+    tests/base/test_pbf_file_reader.py:95-98)."""
     path = Path(path)
     if bbox_column and "bbox" not in features.columns:
         from quackosm_spark.plans.output import geometry_bbox_udf
@@ -192,6 +202,8 @@ def write_geoparquet(
         computed_types, computed_bbox = collect_geo_stats(features)
         geometry_types = geometry_types or computed_types
         bbox = bbox or computed_bbox
+    if encoding == "WKT":
+        features = features.withColumn(GEOMETRY_COLUMN, _to_wkt(GEOMETRY_COLUMN))
     writer = features.write.mode("overwrite").option("compression", compression)
     if compression_level is not None:
         writer = writer.option(

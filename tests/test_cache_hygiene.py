@@ -169,3 +169,52 @@ def test_domain_mix_report_leaves_one_cache(clean_cache):
     )
     domain_mix_report(docs).count()
     _assert_leaks_at_most_one(spark, "domain_mix_report")
+
+
+# --------------------------------------------------------------------------
+# Conversions own their caches: every frame they persist (the scan, the
+# pipeline's fork points, the features) is released when they return —
+# normally or by an exception.
+# --------------------------------------------------------------------------
+
+WILDCARD_EXPLODED = {
+    "tags_filter": {"build*": True, "amenity": ["cafe", "bench"], "highway": True},
+    "explode_tags": True,
+}
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("kwargs", [{}, WILDCARD_EXPLODED], ids=["default", "wildcard-exploded"])
+def test_convert_pbf_to_parquet_releases_its_caches(spark, f1_pbf, tmp_path, kwargs):
+    from quackosm_spark.functions import convert_pbf_to_parquet
+
+    before = _persistent_rdds(spark)
+    out = convert_pbf_to_parquet(spark, f1_pbf, working_directory=tmp_path, **kwargs)
+    assert spark.read.parquet(str(out)).count() > 0
+    assert _persistent_rdds(spark) == before
+
+
+def test_convert_pbf_to_parquet_releases_its_caches_when_the_write_raises(
+    spark, f1_pbf, tmp_path
+):
+    from quackosm_spark.functions import convert_pbf_to_parquet
+
+    before = _persistent_rdds(spark)
+    with pytest.raises(Exception, match="no-such-codec"):
+        convert_pbf_to_parquet(
+            spark, f1_pbf, working_directory=tmp_path, compression="no-such-codec",
+            **WILDCARD_EXPLODED,
+        )
+    assert _persistent_rdds(spark) == before
+
+
+def test_convert_pbf_to_geodataframe_releases_its_caches(spark, f1_pbf):
+    """(The ``*_to_duckdb`` entry points run ``convert_pbf_to_parquet``.)"""
+    from quackosm_spark.functions import convert_pbf_to_geodataframe
+
+    before = _persistent_rdds(spark)
+    assert len(convert_pbf_to_geodataframe(spark, f1_pbf, **WILDCARD_EXPLODED)) > 0
+    assert _persistent_rdds(spark) == before
